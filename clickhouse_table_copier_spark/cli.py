@@ -76,40 +76,30 @@ def _run(mode: str, config_path: str, explain: bool = False) -> int:
                 f"rows={r['rows']} fingerprint={r['fingerprint']}"
             )
 
-    if job.destination.format == "jdbc":
-        # the reference's native shape: remote-server destination
-        # (classify → one DELETE → one distributed INSERT)
-        from clickhouse_table_copier_spark.operators.sync_jdbc import sync_to_jdbc
-        from clickhouse_table_copier_spark.plans.casting import apply_semantic
-
-        if job.semantic_casts:
-            src = apply_semantic(src, job.semantic_casts)
-        result = sync_to_jdbc(
-            spark,
-            src,
-            TableRef(
-                location=job.destination.location,
-                fmt="jdbc",
-                table=job.destination.table,
-                options=job.destination.options,
-            ),
-            spec,
-            options,
-        )
-    else:
-        result = sync(
-            spark, src, job.destination.location, spec, options,
-            semantic=job.semantic_casts,
-        )
+    # one sync core for both destinations (operators.sync): a jdbc
+    # destination is the reference's native shape (one DELETE, one INSERT)
+    result = sync(
+        spark,
+        src,
+        TableRef(
+            location=job.destination.location,
+            fmt=job.destination.format,
+            table=job.destination.table,
+            options=job.destination.options,
+        ),
+        spec,
+        options,
+        semantic=job.semantic_casts,
+    )
     if explain:
         # the working version of the reference's dead --debug flag
         # (main.go:52, "doesnt work"): show the physical plan the engine
         # actually executes for the diff report
-        result.report.explain("formatted")
+        result.diff.explain("formatted")
     # The reference's Info() prints one classification line per partition
-    # (copy/copy.go:12-137); the report DataFrame is that output.
-    rows = result.report.orderBy(*spec.names).collect()
-    for r in rows:
+    # (copy/copy.go:12-137); the report rows, sorted by partition, are that
+    # output.
+    for r in result.report:
         print(
             "partition="
             + ",".join(f"{n}={r[n]}" for n in spec.names)
@@ -121,7 +111,7 @@ def _run(mode: str, config_path: str, explain: bool = False) -> int:
             f"copied_partitions={result.copied_partitions} "
             f"deleted_partitions={result.deleted_partitions}"
         )
-    inconsistent = any(r["verdict"] != "identical" for r in rows)
+    inconsistent = any(r["verdict"] != "identical" for r in result.report)
     if mode == "info" and inconsistent:
         return EXIT_INCONSISTENT
     return EXIT_OK

@@ -16,10 +16,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_table_copier_spark.operators.sync import key_filter
+
 
 @dataclass
 class CompactionResult:
-    report: DataFrame  # partition…, n_files, action
+    report: list  # collected rows: partition…, n_files, n_rows, action
     compacted_partitions: int
 
 
@@ -67,15 +69,10 @@ def compact(
         ),
     )
     rows = report.collect()  # metadata-sized; materialized before rewrite
-    report = spark.createDataFrame(rows, report.schema)
     todo = [tuple(r[n] for n in part_names) for r in rows if r["action"] == "compacted"]
     if todo:
         df = spark.read.parquet(path)
-        key = F.struct(*[F.col(n) for n in part_names])
-        selected = df.where(
-            key.isin([F.struct(*[F.lit(v) for v in k]) for k in todo])
-        )
-        out = selected
+        out = df.where(key_filter(df, part_names, todo))
         sort_cols = list(cluster_by or [])
         if z_order_by is not None:
             from clickhouse_table_copier_spark.operators.zonemap import with_z_order
@@ -99,4 +96,4 @@ def compact(
             .mode("overwrite")
             .parquet(path)
         )
-    return CompactionResult(report=report, compacted_partitions=len(todo))
+    return CompactionResult(report=rows, compacted_partitions=len(todo))

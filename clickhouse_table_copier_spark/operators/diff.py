@@ -1,16 +1,23 @@
-"""Partition diff — the consistency verdict join (SURVEY §2.3 J2, §2.9 C5).
+"""Partition diff — the consistency verdict aggregate (SURVEY §2.3 J2, §2.9 C5).
 
 The reference classifies each source partition against the destination in a
 driver loop (``/root/reference/copy/copy.go:194-266``): probe the dest count
 (``:215``), then paired async fingerprints (``:217-232``), then the verdict
 state machine (``:237-266``). This engine expresses the whole classification
-as ONE full-outer join of the two sides' fingerprint tables:
+as ONE grouped aggregate over the side-tagged union of both tables:
 
-    src_fp FULL OUTER JOIN dest_fp ON partition_keys  →  verdict column
+    (keys…, rows, h, side=0) UNION (keys…, rows, h, side=1)
+      GROUP BY keys  →  sum(rows), bit_xor(h) per side  →  verdict
 
-Both fingerprint tables have one row per partition (tiny — thousands of
-rows even at 100 TB), so the join is broadcast and costs nothing; all the
-heavy lifting happened in the two grouped aggregations that produced them.
+A side with no row in a group aggregates to NULL, which is what marks a
+partition as missing there. ``groupBy`` puts NULL keys in one group, so a
+NULL partition value (hive's ``__HIVE_DEFAULT_PARTITION__``) is one real
+partition, with no null-safe join condition. The input is either per row
+``(1, row_hash)`` (``diff_partitions``) or per partition
+``(rows, fingerprint)`` (``classify_fingerprints``, e.g. from manifests):
+XOR and sum combine either the same way, so one verdict expression serves
+both. The aggregate combines map-side, so only #partitions × 2 partial rows
+cross the shuffle.
 
 Verdicts (the C5 state machine, minus its known WaitGroup bug):
 - ``copy``          dest partition absent or empty (copy.go:262-266, :241-245)
@@ -27,7 +34,7 @@ from enum import Enum
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clickhouse_table_copier_spark.operators.fingerprint import partition_fingerprints
+from clickhouse_table_copier_spark.functions.scalars import row_hash
 from clickhouse_table_copier_spark.plans.partition_spec import PartitionSpec
 
 
@@ -45,17 +52,24 @@ def diff_partitions(
     cols: list[str] | None = None,
     check_hashes: bool = True,
 ) -> DataFrame:
-    """Classify every partition in one pass per side + one tiny join.
+    """Classify every partition of both tables in one grouped aggregate.
 
+    Each side hashes ``cols`` (default: all of its own columns).
     ``check_hashes=False`` degrades the comparison to row counts only — the
     reference's ``check_hashes`` toggle (config/config.go:34, C6).
-    Returns: partition keys + src_rows, dest_rows, src_fingerprint,
+    Returns: partition keys + src_rows, src_fingerprint, dest_rows,
     dest_fingerprint, verdict — the report the reference's ``--info`` mode
     prints (copy/copy.go:12-137), as a DataFrame.
     """
-    src_fp = partition_fingerprints(src, spec, cols)
-    dest_fp = partition_fingerprints(dest, spec, cols)
-    return classify_fingerprints(src_fp, dest_fp, list(spec.names), check_hashes)
+    per_row = [
+        spec.with_partition_columns(df).select(
+            *spec.names,
+            F.lit(1).alias("rows"),
+            row_hash(*(cols or df.columns)).alias("fingerprint"),
+        )
+        for df in (src, dest)
+    ]
+    return classify_fingerprints(*per_row, spec.names, check_hashes)
 
 
 def classify_fingerprints(
@@ -64,66 +78,39 @@ def classify_fingerprints(
     names: list[str],
     check_hashes: bool = True,
 ) -> DataFrame:
-    """The verdict join over two pre-aggregated (keys, rows, fingerprint)
-    tables — shared by the live diff and the offline manifest diff
-    (operators.manifest): one row per partition in, one verdict row out."""
-    spec = PartitionSpec.bare(*names)
-    s = src_fp.select(
-        *spec.names,
-        F.col("rows").alias("src_rows"),
-        F.col("fingerprint").alias("src_fingerprint"),
-    )
-    d = dest_fp.select(
-        *spec.names,
-        F.col("rows").alias("dest_rows"),
-        F.col("fingerprint").alias("dest_fingerprint"),
-    )
+    """The verdict aggregate over two (keys, rows, fingerprint) tables —
+    shared by the live diff and the offline manifest diff
+    (operators.manifest): one verdict row out per partition key."""
+    tagged = [
+        fp.select(*names, "rows", "fingerprint", F.lit(i).alias("__side"))
+        for i, fp in enumerate((src_fp, dest_fp))
+    ]
 
-    # Both sides are one-row-per-partition (thousands of rows even at
-    # 100 TB). full_outer can't broadcast, so shuffle-hash-join hint both
-    # sides — avoids the sort of a SortMergeJoin on these tiny inputs.
-    # Null-safe key equality: a NULL partition value is a real partition
-    # (hive's __HIVE_DEFAULT_PARTITION__); standard join equality would
-    # split it into phantom copy+extra rows.
-    d_renamed = d.select(
-        *[F.col(n).alias(f"__d_{n}") for n in spec.names],
-        "dest_rows",
-        "dest_fingerprint",
-    )
-    cond = None
-    for n in spec.names:
-        c = F.col(n).eqNullSafe(F.col(f"__d_{n}"))
-        cond = c if cond is None else cond & c
+    def side(i: int, col: str):
+        return F.when(F.col("__side") == i, F.col(col))
+
+    src_rows, dest_rows = F.sum(side(0, "rows")), F.sum(side(1, "rows"))
+    src_h, dest_h = F.bit_xor(side(0, "fingerprint")), F.bit_xor(side(1, "fingerprint"))
+    equal = src_rows == dest_rows
     if check_hashes:
-        equal = F.col("src_fingerprint").eqNullSafe(F.col("dest_fingerprint")) & F.col(
-            "src_rows"
-        ).eqNullSafe(F.col("dest_rows"))
-    else:
-        equal = F.col("src_rows").eqNullSafe(F.col("dest_rows"))
-
+        equal = equal & src_h.eqNullSafe(dest_h)
     verdict = (
-        F.when(F.col("src_rows").isNull(), F.lit(Verdict.EXTRA.value))
-        .when(
-            F.col("dest_rows").isNull() | (F.col("dest_rows") == 0),
-            F.lit(Verdict.COPY.value),
-        )
+        F.when(src_rows.isNull(), F.lit(Verdict.EXTRA.value))
+        .when(dest_rows.isNull() | (dest_rows == 0), F.lit(Verdict.COPY.value))
         .when(equal, F.lit(Verdict.IDENTICAL.value))
         .otherwise(F.lit(Verdict.INCONSISTENT.value))
     )
-    # verdict rides in the join's projection: a trailing withColumn would
-    # be one more eager JVM re-analysis of the whole diff lineage per call
+    # the verdict is computed inside the aggregate: Spark shares the
+    # repeated aggregate functions, and no projection follows
     return (
-        s.hint("shuffle_hash")
-        .join(d_renamed.hint("shuffle_hash"), cond, "full_outer")
-        .select(
-            *[
-                F.coalesce(F.col(n), F.col(f"__d_{n}")).alias(n)
-                for n in spec.names
-            ],
-            "src_rows",
-            "src_fingerprint",
-            "dest_rows",
-            "dest_fingerprint",
+        tagged[0]
+        .unionByName(tagged[1])
+        .groupBy(*names)
+        .agg(
+            src_rows.alias("src_rows"),
+            src_h.alias("src_fingerprint"),
+            dest_rows.alias("dest_rows"),
+            dest_h.alias("dest_fingerprint"),
             verdict.alias("verdict"),
         )
     )

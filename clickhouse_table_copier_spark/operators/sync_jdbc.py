@@ -1,21 +1,19 @@
 """Sync into a JDBC destination — the reference's native shape end-to-end.
 
-The parquet path (``operators.sync``) replaces delete+reinsert with
-dynamic partition overwrite; a remote SQL server has no such primitive,
-so this module is the faithful D1+D2 loop (``/root/reference/copy/
-copy.go:139-271``): classify partitions with ONE diff join, then
+The diff, the dest-type projection and the action plan are the shared
+sync core (``operators.sync.sync_core``): the destination's columns are
+matched to the source's case-insensitively (Derby/Oracle uppercase
+identifiers), and comparison runs in the DESTINATION's type domain, the
+same convergence contract as the parquet path. A remote SQL server has no
+dynamic partition overwrite, so this module's applier is the faithful
+D1+D2 loop (``/root/reference/copy/copy.go:139-271``):
 
 - D1 delete: one ``DELETE FROM t WHERE (k=v AND …) OR (…)`` statement
-  covering every inconsistent partition (``ALTER TABLE … DELETE``
-  parity, database.go:463-484) — driver-side, metadata-sized;
+  covering every partition being replaced or dropped (``ALTER TABLE …
+  DELETE`` parity, database.go:463-484) — driver-side, metadata-sized;
 - D2 insert: one distributed append of all partitions needing data
   (``INSERT … SELECT`` parity, database.go:486-507) via the executors'
-  JDBC connections.
-
-Comparison runs in the DESTINATION's type domain (source hashed through
-the dest-type casts it will INSERT with) — same convergence contract as
-the parquet path. Column-name case is normalized (Derby/Oracle uppercase
-identifiers) so the diff join and the insert projection line up.
+  JDBC connections; it also creates an absent table.
 
 The delete-then-insert window is visible to concurrent readers — exactly
 the reference's semantics, and why both verify with fingerprints on the
@@ -28,10 +26,8 @@ import datetime
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from clickhouse_table_copier_spark.operators.diff import Verdict, diff_partitions
-from clickhouse_table_copier_spark.operators.sync import SyncOptions, SyncResult
+from clickhouse_table_copier_spark.operators.sync import SyncOptions, SyncResult, sync_core
 from clickhouse_table_copier_spark.plans.partition_spec import PartitionSpec
 from clickhouse_table_copier_spark.sources.table import (
     TableRef,
@@ -114,9 +110,8 @@ def _jdbc_execute(spark: SparkSession, ref: TableRef, sql: str) -> None:
 # SQLStates that mean "that table does not exist" — Derby 42X05,
 # SQL-Server/MySQL-family 42S02, Postgres 42P01, ODBC S0002, DB2 42704.
 # Anything else (connection refused, auth failure, timeout) is NOT
-# evidence of absence: treating it as missing routed sync_to_jdbc into the
-# dest-absent branch whose overwrite DROPS the remote table — destroying
-# dest-only data on a transient network blip.
+# evidence of absence: treating it as missing would diff against an empty
+# destination and re-append every partition the table already holds.
 _TABLE_MISSING_SQLSTATES = frozenset({"42X05", "42S02", "42P01", "S0002", "42704"})
 
 
@@ -163,111 +158,26 @@ def sync_to_jdbc(
     dest_ref: TableRef,
     spec: PartitionSpec,
     options: SyncOptions = SyncOptions(),
+    semantic: dict | None = None,
 ) -> SyncResult:
     """Make the JDBC destination table match ``src`` partition-wise."""
-    src_parts = spec.with_partition_columns(src)
-    data_cols = [c for c in src.columns if c not in spec.names]
+    names = spec.names
 
-    if not _jdbc_table_exists(spark, dest_ref):
-        report = (
-            src_parts.groupBy(*spec.names)
-            .agg(F.count(F.lit(1)).alias("src_rows"))
-            .withColumn("dest_rows", F.lit(None).cast("bigint"))
-            .withColumn("verdict", F.lit(Verdict.COPY.value))
-            .withColumn("action", F.lit("copied" if not options.dry_run else "none"))
-        )
-        copied = 0
-        if not options.dry_run:
-            write_table(src_parts, dest_ref, mode="overwrite")
-            copied = report.count()
-        return SyncResult(report=report, copied_partitions=copied, deleted_partitions=0)
+    def apply(rows_of, keys: dict) -> tuple:
+        # D1: one DELETE covering every partition being replaced or dropped
+        doomed = keys["overwritten"] + keys["deleted"]
+        if doomed:
+            where = sql_equality_where(
+                names, doomed, backslash_escapes=dialect_backslash_escapes(dest_ref.location)
+            )
+            _jdbc_execute(spark, dest_ref, f"DELETE FROM {dest_ref.table} WHERE {where}")
+        # D2: one distributed append of everything needing data, in the
+        # destination's types (INSERT INTO dest (cols) SELECT castExprs);
+        # an absent table is created by this append
+        to_write = keys["copied"] + keys["overwritten"] + keys["appended"]
+        if to_write:
+            write_table(rows_of(to_write), dest_ref, mode="append")
+        return len(to_write), len(doomed)
 
-    dest = load_table(spark, dest_ref)
-    # case-normalize (Derby/Oracle uppercase identifiers) back to the
-    # source-side names so joins/projections line up
-    by_lower = {c.lower(): c for c in dest.columns}
-    missing = [n for n in spec.names if n.lower() not in by_lower]
-    if missing:
-        raise ValueError(f"dest table lacks partition columns: {missing}")
-    common = [c for c in data_cols if c.lower() in by_lower]
-    src_types = dict(src_parts.dtypes)
-    dest_named = dest.select(
-        *[F.col(by_lower[n.lower()]).cast(src_types[n]).alias(n) for n in spec.names],
-        *[F.col(by_lower[c.lower()]).alias(c) for c in common],
-    )
-    dest_types = dict(dest_named.dtypes)
-    src_cmp = src_parts.select(
-        *spec.names,
-        *[F.col(c).cast(dest_types[c]).alias(c) for c in common],
-    )
-
-    report = diff_partitions(
-        src_cmp,
-        dest_named,
-        PartitionSpec.bare(*spec.names),
-        cols=common,
-        check_hashes=options.check_hashes,
-    )
-
-    action = (
-        F.when(F.col("verdict") == Verdict.COPY.value, F.lit("copied"))
-        .when(
-            (F.col("verdict") == Verdict.INCONSISTENT.value)
-            & F.lit(not options.skip_delete)
-            & F.lit(not options.skip_reimport),
-            F.lit("overwritten"),
-        )
-        .when(
-            (F.col("verdict") == Verdict.INCONSISTENT.value)
-            & F.lit(options.skip_delete)
-            & F.lit(not options.skip_reimport),
-            F.lit("appended"),
-        )
-        .when(
-            (F.col("verdict") == Verdict.INCONSISTENT.value)
-            & F.lit(not options.skip_delete)
-            & F.lit(options.skip_reimport),
-            F.lit("deleted"),
-        )
-        .otherwise(F.lit("none"))
-    )
-    report = report.withColumn(
-        "action", action if not options.dry_run else F.lit("none")
-    )
-    if options.dry_run:
-        return SyncResult(report=report, copied_partitions=0, deleted_partitions=0)
-
-    rows = report.collect()  # metadata-sized, materialized before mutation
-    report = spark.createDataFrame(rows, report.schema)
-    key = lambda r: tuple(r[n] for n in spec.names)  # noqa: E731
-
-    # D1: one DELETE covering every partition being replaced or dropped
-    doomed = [key(r) for r in rows if r["action"] in ("overwritten", "deleted")]
-    deleted = 0
-    if doomed:
-        where = sql_equality_where(
-            list(spec.names),
-            doomed,
-            backslash_escapes=dialect_backslash_escapes(dest_ref.location),
-        )
-        _jdbc_execute(spark, dest_ref, f"DELETE FROM {dest_ref.table} WHERE {where}")
-        deleted = len(doomed)
-
-    # D2: one distributed append of everything needing data, cast to the
-    # destination's types (INSERT INTO dest (cols) SELECT castExprs)
-    to_write = [
-        key(r) for r in rows if r["action"] in ("copied", "overwritten", "appended")
-    ]
-    copied = 0
-    if to_write:
-        key_col = F.struct(*[F.col(n) for n in spec.names])
-        filtered = src_parts.where(
-            key_col.isin([F.struct(*[F.lit(v) for v in k]) for k in to_write])
-        ).select(
-            *spec.names,
-            *[F.col(c).cast(dest_types[c]).alias(c) for c in common],
-        )
-        write_table(filtered, dest_ref, mode="append")
-        copied = len(to_write)
-
-    return SyncResult(report=report, copied_partitions=copied, deleted_partitions=deleted)
+    dest = load_table(spark, dest_ref) if _jdbc_table_exists(spark, dest_ref) else None
+    return sync_core(src, dest, spec, options, semantic, apply)

@@ -3,7 +3,6 @@
 from clickhouse_table_copier_spark.plans.partition_spec import (  # noqa: F401
     PartitionField,
     PartitionSpec,
-    parse_partition_value,
 )
 from clickhouse_table_copier_spark.plans.predicates import (  # noqa: F401
     equality_predicate,

@@ -24,7 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from clickhouse_table_copier_spark.operators.sync import SyncOptions, SyncResult, sync
+from clickhouse_table_copier_spark.operators.sync import (
+    SyncOptions,
+    SyncResult,
+    key_filter,
+    sync,
+)
 from clickhouse_table_copier_spark.plans.partition_spec import PartitionSpec
 
 
@@ -114,10 +119,7 @@ def incremental_sync(
 
     src = spark.read.parquet(source_dir)
     src_parts = spec.with_partition_columns(src)
-    key = F.struct(*[F.col(n) for n in spec.names])
-    pruned = src_parts.where(
-        key.isin([F.struct(*[F.lit(v) for v in k]) for k in touched])
-    )
+    pruned = src_parts.where(key_filter(src_parts, spec.names, touched))
     # hand sync a plain source frame: drop only DERIVED partition columns
     # (bare-column keys ARE data columns and must stay)
     derived = [f.name for f in spec.fields if f.expr != f.name]

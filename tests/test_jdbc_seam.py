@@ -223,7 +223,7 @@ def test_jdbc_source_syncs_to_parquet_dest(spark, derby_table, tmp_path):
     res = sync(spark, src, dest, spec)
     assert res.copied_partitions == 4
     res2 = sync(spark, src, dest, spec, SyncOptions(dry_run=True))
-    assert {r["verdict"] for r in res2.report.collect()} == {"identical"}
+    assert {r["verdict"] for r in res2.report} == {"identical"}
 
 
 def test_config_surfaces_retry_options():
@@ -326,7 +326,7 @@ def test_sync_to_jdbc_full_cycle(spark):
     # 2. identical → all-identical, nothing written
     res2 = sync_to_jdbc(spark, li, _jdbc_ref("li_sync"), spec)
     assert res2.copied_partitions == 0 and res2.deleted_partitions == 0
-    assert {r["verdict"] for r in res2.report.collect()} == {"identical"}
+    assert {r["verdict"] for r in res2.report} == {"identical"}
 
     # 3. corrupt one partition + delete another on the dest, then repair
     from clickhouse_table_copier_spark.operators.sync_jdbc import _jdbc_execute
@@ -339,7 +339,7 @@ def test_sync_to_jdbc_full_cycle(spark):
         spark, _jdbc_ref("li_sync"), 'DELETE FROM li_sync WHERE "ship_month" = 7'
     )
     res3 = sync_to_jdbc(spark, li, _jdbc_ref("li_sync"), spec)
-    actions = {r["ship_month"]: r["action"] for r in res3.report.collect()}
+    actions = {r["ship_month"]: r["action"] for r in res3.report}
     assert actions[4] == "overwritten" and actions[7] == "copied"
     assert res3.deleted_partitions == 1 and res3.copied_partitions == 2
 
@@ -347,7 +347,7 @@ def test_sync_to_jdbc_full_cycle(spark):
     res4 = sync_to_jdbc(
         spark, li, _jdbc_ref("li_sync"), spec, SyncOptions(dry_run=True)
     )
-    assert {r["verdict"] for r in res4.report.collect()} == {"identical"}
+    assert {r["verdict"] for r in res4.report} == {"identical"}
 
 
 def test_sql_equality_where_renders_tuples_and_nulls():
@@ -405,13 +405,45 @@ def test_sync_to_jdbc_tuple_key_delete(spark):
         " OR (\"event_type\" = 'view' AND \"vband\" = 1)",
     )
     res2 = sync_to_jdbc(spark, ev, ref, spec)
-    acts = {(r["event_type"], r["vband"]): r["action"] for r in res2.report.collect()}
+    acts = {(r["event_type"], r["vband"]): r["action"] for r in res2.report}
     assert acts[("click", 0)] == "overwritten" and acts[("view", 1)] == "overwritten"
     assert sum(1 for a in acts.values() if a == "overwritten") == 2
     assert res2.deleted_partitions == 2 and res2.copied_partitions == 2
 
     res3 = sync_to_jdbc(spark, ev, ref, spec)
-    assert {r["verdict"] for r in res3.report.collect()} == {"identical"}
+    assert {r["verdict"] for r in res3.report} == {"identical"}
+
+
+def test_sync_to_jdbc_null_partition_key_converges(spark):
+    """A drifted NULL-keyed partition is deleted with ``IS NULL`` and
+    re-appended through the null-safe source filter — not lost between the
+    DELETE and a failing append — and the next info reports all identical."""
+    from clickhouse_table_copier_spark.operators.sync import SyncOptions
+    from clickhouse_table_copier_spark.operators.sync_jdbc import (
+        _jdbc_execute,
+        sync_to_jdbc,
+    )
+    from clickhouse_table_copier_spark.plans.partition_spec import PartitionSpec
+
+    src = spark.createDataFrame(
+        [(1, None, 1.0), (2, None, 2.0), (3, 1, 3.0), (4, 2, 4.0)],
+        "id BIGINT, k INT, v DOUBLE",
+    )
+    ref, spec = _jdbc_ref("null_sync"), PartitionSpec.bare("k")
+    assert sync_to_jdbc(spark, src, ref, spec).copied_partitions == 3
+
+    _jdbc_execute(
+        spark, ref, 'UPDATE null_sync SET "v" = "v" + 1 WHERE "k" IS NULL OR "k" = 1'
+    )
+    res = sync_to_jdbc(spark, src, ref, spec)
+    assert {r["k"]: r["action"] for r in res.report} == {
+        None: "overwritten", 1: "overwritten", 2: "none",
+    }
+    assert res.deleted_partitions == 2 and res.copied_partitions == 2
+
+    info = sync_to_jdbc(spark, src, ref, spec, SyncOptions(dry_run=True))
+    assert {r["verdict"] for r in info.report} == {"identical"}
+    assert load_table(spark, ref).count() == 4
 
 
 def test_sync_to_jdbc_rejects_missing_partition_columns(spark):

@@ -838,6 +838,27 @@ def test_manifest_diff_matches_live_diff(spark, tmp_path):
     assert offline[7] == "copy" and offline[4] == "inconsistent"
     assert sum(1 for v in offline.values() if v == "identical") == 10
 
+    # a NULL partition key, plus a src-only and a dest-only key: the same
+    # verdicts from manifests and from the live diff
+    src = spark.createDataFrame(
+        [(None, 1), (None, 2), ("a", 3), ("b", 4)], "k STRING, v INT"
+    )
+    dest = spark.createDataFrame(
+        [(None, 1), (None, 2), ("a", 99), ("c", 5)], "k STRING, v INT"
+    )
+    spec_k = PartitionSpec.bare("k")
+    sm, dm = str(tmp_path / "src_k"), str(tmp_path / "dest_k")
+    write_fingerprint_manifest(src, spec_k, sm, ["v"])
+    write_fingerprint_manifest(dest, spec_k, dm, ["v"])
+    offline = {r["k"]: r["verdict"] for r in diff_manifests(spark, sm, dm, ["k"]).collect()}
+    live = {
+        r["k"]: r["verdict"]
+        for r in diff_partitions(src, dest, spec_k, cols=["v"]).collect()
+    }
+    assert offline == live == {
+        None: "identical", "a": "inconsistent", "b": "copy", "c": "extra",
+    }
+
 
 def test_audio_wav_decode_matches_stdlib_wave(spark):
     """The synthesized bytes are REAL WAV files: the stdlib `wave` module

@@ -46,10 +46,15 @@ def test_dimension_joins_broadcast(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_diff_join_is_shuffle_hash_not_sort_merge(spark):
+def test_diff_is_one_aggregate_without_join(spark):
+    """The partition diff is ONE map-side-combined aggregate over the
+    side-tagged union of both tables: no join, no sort, one shuffle of the
+    grouped partials."""
     plan = _plan(spark, "partition_diff")
-    assert "ShuffledHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert "Join" not in plan and "Sort" not in plan, plan[:500]
+    assert plan.count("Exchange") == 1, plan[:500]
+    assert plan.count("HashAggregate") == 2, plan[:500]
+    assert "Union" in plan, plan[:500]
 
 
 def test_topk_uses_take_ordered(spark):
